@@ -175,6 +175,16 @@ class _BitReader:
         raise ValueError("jpeg_bad_huffman_code")
 
 
+def _dc_size(reader: _BitReader, dc_tab: _HuffTable) -> int:
+    """One DC difference category. T.81 F.1.2.1 caps it at 11 for
+    8-bit samples; a DHT carrying a larger symbol would read up to 255
+    raw bits and overflow the int32 coefficient planes."""
+    size = reader.read_symbol(dc_tab)
+    if size > 11:
+        raise ValueError("jpeg_bad_dc_size")
+    return size
+
+
 def _extend(v: int, size: int) -> int:
     """T.81 F.2.2.1 EXTEND: map `size` raw bits to a signed value."""
     if size == 0:
@@ -367,7 +377,7 @@ def decode_jpeg_luma(raw: bytes) -> tuple[int, int, bytes]:
                 for by in range(cv):
                     for bx in range(ch):
                         coeffs = np.zeros(64)
-                        size = reader.read_symbol(dc_tab)
+                        size = _dc_size(reader, dc_tab)
                         diff = _extend(reader.read_bits(size), size)
                         preds[cid] += diff
                         coeffs[0] = preds[cid]
@@ -447,7 +457,7 @@ def _find_scan_end(raw: bytes, pos: int) -> int:
 
 
 def _dc_first_block(reader, dc_tab, preds, cid, al):
-    size = reader.read_symbol(dc_tab)
+    size = _dc_size(reader, dc_tab)
     preds[cid] += _extend(reader.read_bits(size), size)
     return preds[cid] << al
 

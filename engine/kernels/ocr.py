@@ -47,15 +47,6 @@ def find_image_bitmaps(raw: bytes) -> list[tuple[int, int, bytes]]:
     return out
 
 
-def has_image(raw: bytes | None) -> bool:
-    if not is_pdf(raw):
-        return False
-    try:
-        return bool(find_image_bitmaps(raw))
-    except Exception:
-        return False
-
-
 def decode_bitmap(width: int, height: int, packed: bytes) -> str:
     """Rebuild text from a row-padded 1-bit bitmap on the glyph grid."""
     row_bytes = (width + 7) // 8

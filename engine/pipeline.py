@@ -340,13 +340,6 @@ def with_partition_key(pages: DataFrame, host_buckets: int = 64) -> DataFrame:
     return pages.withColumn("part_key", partition_key_col(host_buckets=host_buckets))
 
 
-def build_pipeline(pages: DataFrame, num_partitions: int | None = None) -> dict:
-    extracted = build_extracted(pages, num_partitions)
-    chunks = build_chunks(extracted)
-    vectors = build_vectors(chunks)
-    return {"extracted": extracted, "chunks": chunks, "vectors": vectors}
-
-
 def changed_docs(
     prior_extracted: DataFrame,
     incoming_extracted: DataFrame,

@@ -137,7 +137,7 @@ def media_neardup_stream(
     64-bit hash, so the exact hamming distance is computed in the
     join and filtered to max_hamming — candidate recall keeps the
     pigeonhole guarantee while the emitted pairs are exact, identical
-    to batch image_neardup_pairs on the same assets (pinned in
+    to batch pairs restricted to (arriving, indexed) pairs (pinned in
     tests/test_streaming.py). Band-collision multiplicity is deduped
     per micro-batch in the foreachBatch sink (the media schema has no
     event time to watermark on; a file-sourced asset arrives exactly

@@ -199,15 +199,6 @@ def docmeta_udf(html: pd.Series) -> pd.DataFrame:
     )
 
 
-@pandas_udf(IntegerType())
-def n_sentences_udf(text: pd.Series) -> pd.Series:
-    from engine.kernels.sentences import sentence_spans_batch
-
-    return pd.Series(
-        [len(s) for s in sentence_spans_batch(list(text))], dtype="int32"
-    )
-
-
 def chunk_map_in_pandas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas fn: (url, text, sent_spans) batches -> CHUNKS_DDL
     rows (A7). Sentence spans were computed by the extract UDF and

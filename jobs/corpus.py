@@ -51,12 +51,16 @@ Stages, each writing its own parquet table under <output>/:
                --report-compare adds crawl-over-crawl deltas against
                a previous run's card
 
-Stage resume: after each stage commits, <output>/corpus_manifest.json
-is atomically rewritten (tmp + rename, same discipline as
-engine/checkpoint.py). `--resume` skips every stage whose manifest
-entry exists AND whose output _SUCCESS marker is present — a crash
-loses at most the stage in flight, and a finished run reruns as five
-no-ops. Stage outputs are plain parquet tables: any stage can also be
+`run` declares these stages as one ordered list and drives them with
+one loop. Each enabled stage reads the previous enabled stage's table
+and records that table as params["input"] (every stage after extract),
+beside its own semantics-affecting params. After each stage commits,
+<output>/corpus_manifest.json is atomically rewritten (tmp + rename,
+same discipline as engine/checkpoint.py). `--resume` skips a stage
+only when its manifest entry carries the same params, no earlier stage
+re-ran, and its output _SUCCESS marker is present — a crash loses at
+most the stage in flight, and a finished run reruns as all no-ops.
+Stage outputs are plain parquet tables: any stage can also be
 re-driven by its standalone job (jobs/{dedup,curate}.py) against the
 same directories.
 
@@ -70,6 +74,8 @@ import json
 import os
 import sys
 import time
+import types
+from typing import Callable, NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -78,6 +84,23 @@ from pyspark.sql import functions as F  # noqa: E402
 from engine.session import get_spark  # noqa: E402
 
 MANIFEST = "corpus_manifest.json"
+
+
+class _Stage(NamedTuple):
+    """One entry of the corpus chain. `build` maps the input table (the
+    previous enabled stage's output) to this stage's DataFrame, which
+    the stage loop writes to <output>/<table> and counts. A stage whose
+    output is not one plain parquet table (curate's kept + rejected,
+    split's partitioned table, pack's side chunks table and stats,
+    export's JSONL shards) sets `writes` and is called as
+    build(input_path, output_path) -> rows instead."""
+
+    name: str
+    table: str
+    build: Callable
+    params: dict | None = None
+    on: bool = True
+    writes: bool = False
 
 
 def _load_manifest(out_dir: str) -> dict:
@@ -98,11 +121,7 @@ def _commit_stage(out_dir: str, manifest: dict, stage: str, info: dict) -> None:
 
 
 def _stage_done(
-    out_dir: str,
-    manifest: dict,
-    stage: str,
-    table: str,
-    params: dict | None = None,
+    out_dir: str, manifest: dict, stage: str, table: str, params: dict
 ) -> bool:
     """A committed stage only counts when its semantics-affecting
     params match what the manifest recorded — re-running with e.g.
@@ -111,7 +130,7 @@ def _stage_done(
     were recorded (no 'params' key) match only an empty params dict."""
     if stage not in manifest["stages"]:
         return False
-    if (manifest["stages"][stage].get("params") or {}) != (params or {}):
+    if (manifest["stages"][stage].get("params") or {}) != params:
         return False
     return os.path.exists(os.path.join(out_dir, table, "_SUCCESS"))
 
@@ -129,46 +148,10 @@ def run(args) -> dict:
     os.makedirs(out, exist_ok=True)
     manifest = _load_manifest(out) if args.resume else {"stages": {}}
 
-    dirty = False  # once any stage re-runs, every later stage must too
-
-    def stage(name: str, table: str, action, params: dict | None = None) -> None:
-        """Run one stage unless already committed WITH the same
-        semantics-affecting params; commit its manifest entry
-        (rows + wall + params) before the next stage starts. A stage
-        that re-runs invalidates everything downstream of it — its
-        output is those stages' input, so their committed tables are
-        stale even though their own params match."""
-        nonlocal dirty
-        if (
-            args.resume
-            and not dirty
-            and _stage_done(out, manifest, name, table, params)
-        ):
-            return
-        dirty = True
-        t0 = time.monotonic()
-        table_path = os.path.join(out, table)
-        rows = action(table_path)
-        # partitionBy writes under the session's dynamic
-        # partitionOverwriteMode commit WITHOUT a root _SUCCESS
-        # (observed on the splits stage: every resume re-ran split and
-        # cascaded through pack/export). The marker is this job's
-        # stage-completion contract, so guarantee it ourselves — the
-        # action has fully returned, which is exactly what _SUCCESS
-        # asserts.
-        marker = os.path.join(table_path, "_SUCCESS")
-        if os.path.isdir(table_path) and not os.path.exists(marker):
-            open(marker, "w").close()
-        info = {"rows": int(rows), "wall_s": round(time.monotonic() - t0, 2)}
-        if params:
-            info["params"] = params
-        _commit_stage(out, manifest, name, info)
-
     # -- extract ------------------------------------------------------
-    def do_extract(path: str) -> int:
+    def extract(pages):
         from engine.pipeline import build_extracted
 
-        pages = spark.read.parquet(args.pages)
         if args.robots:
             # per-HOST opt-out first (RFC 9309): disallowed urls never
             # enter any derived table; rules broadcast, pages map-only
@@ -191,8 +174,7 @@ def run(args) -> dict:
             pages = license_filter(
                 pages, require_rel=args.license_filter == "strict"
             ).drop("license_code", "license_version", "license_rel")
-        build_extracted(pages).write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path).count()
+        return build_extracted(pages)
 
     extract_params = {}
     if args.respect_noindex:
@@ -202,145 +184,54 @@ def run(args) -> dict:
         extract_params["crawler"] = args.crawler
     if args.license_filter:
         extract_params["license_filter"] = args.license_filter
-    stage("extract", "extracted", do_extract, params=extract_params or None)
-    neardup_input = "extracted"
 
     # -- optional: line-wise corrections (RefinedWeb §3.1.3) -----------
     # BEFORE near-dup, so boilerplate lines neither pollute minhash
     # signatures nor survive into any downstream table
-    if args.fix_lines:
+    def linefix(docs):
+        from engine.ops.linefix import fix_lines
 
-        def do_linefix(path: str) -> int:
-            from engine.ops.linefix import fix_lines
-
-            docs = spark.read.parquet(os.path.join(out, "extracted"))
-            fixed = fix_lines(docs, max_removed_frac=args.max_removed_frac)
-            (
-                fixed.filter(F.col("line_keep"))
-                .withColumn("text", F.col("text_fixed"))
-                .drop("text_fixed", "line_keep")
-                .write.mode("overwrite")
-                .parquet(path)
-            )
-            return spark.read.parquet(path).count()
-
-        stage(
-            "linefix",
-            "linefixed",
-            do_linefix,
-            params={"max_removed_frac": args.max_removed_frac},
+        fixed = fix_lines(docs, max_removed_frac=args.max_removed_frac)
+        return (
+            fixed.filter(F.col("line_keep"))
+            .withColumn("text", F.col("text_fixed"))
+            .drop("text_fixed", "line_keep")
         )
-        neardup_input = "linefixed"
 
     # -- optional: monolingual slice (CCNet paragraph language ID) -----
-    if args.monolingual:
+    def langsplit(docs):
+        from engine.ops.langsplit import filter_language
 
-        def do_langsplit(path: str) -> int:
-            from engine.ops.langsplit import filter_language
-
-            docs = spark.read.parquet(os.path.join(out, neardup_input))
-            filter_language(
-                docs, args.monolingual, min_frac=args.lang_min_frac
-            ).write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path).count()
-
-        stage(
-            "langsplit",
-            "monolingual",
-            do_langsplit,
-            params={
-                "lang": args.monolingual,
-                "min_frac": args.lang_min_frac,
-            },
-        )
-        neardup_input = "monolingual"
+        return filter_language(docs, args.monolingual, min_frac=args.lang_min_frac)
 
     # -- near-dup dedup to canonical docs ------------------------------
-    def do_neardup(path: str) -> int:
+    def neardup(docs):
         from engine.ops.dedup import minhash_candidate_pairs
         from engine.ops.graph import dedup_clusters
 
-        docs = spark.read.parquet(os.path.join(out, neardup_input))
-        nonempty = docs.filter(
-            F.length(F.coalesce(F.col("text"), F.lit(""))) > 0
-        )
+        nonempty = docs.filter(F.length(F.coalesce(F.col("text"), F.lit(""))) > 0)
         pairs = minhash_candidate_pairs(nonempty, id_col="url")
         clusters = dedup_clusters(nonempty.select("url"), pairs, id_col="url")
-        canonical = nonempty.join(
-            clusters.filter("is_canonical = 1").select("url"), "url"
-        )
-        canonical.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path).count()
-
-    # input table is a semantics-affecting param: toggling --fix-lines /
-    # --monolingual on a resumed run changes what neardup reads, so the
-    # committed stage must not be trusted across that change
-    stage("neardup", "canonical", do_neardup, params={"input": neardup_input})
+        return nonempty.join(clusters.filter("is_canonical = 1").select("url"), "url")
 
     # -- corpus-wide line dedup rewrite --------------------------------
-    def do_linedup(path: str) -> int:
+    def linedup(docs):
         from engine.ops.linedup import dedup_lines
 
-        docs = spark.read.parquet(os.path.join(out, "canonical"))
-        dedup_lines(docs, id_col="url").write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path).count()
-
-    stage("linedup", "cleaned", do_linedup)
-    curate_input = "cleaned"
+        return dedup_lines(docs, id_col="url")
 
     # -- optional: exact-substring dedup rewrite (Lee et al. 2022) ------
-    if args.substr_w:
+    def substrdedup(docs):
+        from engine.ops.substrdedup import dedup_substrings
 
-        def do_substr(path: str) -> int:
-            from engine.ops.substrdedup import dedup_substrings
-
-            docs = spark.read.parquet(os.path.join(out, "cleaned"))
-            dedup_substrings(docs, w=args.substr_w, id_col="url").write.mode(
-                "overwrite"
-            ).parquet(path)
-            return spark.read.parquet(path).count()
-
-        stage(
-            "substrdedup", "substr_cleaned", do_substr,
-            params={"w": args.substr_w},
-        )
-        curate_input = "substr_cleaned"
+        return dedup_substrings(docs, w=args.substr_w, id_col="url")
 
     # -- curation (+ optional LM screen): the standalone job, composed -
-    def do_curate(path: str) -> int:
-        import types
-
-        from jobs.curate import run as curate_run
-
-        res = curate_run(
-            types.SimpleNamespace(
-                input=os.path.join(out, curate_input),
-                output=path,
-                id_col="url",
-                min_tokens=args.min_tokens,
-                no_check_lang=not args.check_lang,
-                url_filter=args.url_filter or bool(args.url_blocklist),
-                url_blocklist=args.url_blocklist,
-                lm_filter=args.lm_filter,
-                lm_pct=args.lm_pct,
-                gopher_repetition=args.gopher_repetition,
-                compression_min=args.compression_min,
-                compression_max=args.compression_max,
-                drop_code=args.drop_code,
-                master=args.master,
-                shuffle_partitions=args.shuffle_partitions,
-            )
-        )
-        return res["kept"]
-
-    # curate must honor the same resume discipline as stage(): skip only
-    # when upstream is clean AND its semantics-affecting params match.
-    # (It can't go through stage() verbatim because the curate job
-    # writes <table>/kept/_SUCCESS, not <table>/_SUCCESS.)
-    curate_params = {
-        "input": curate_input,
+    # one dict is both the jobs/curate.py arguments and the resume key;
+    # the job writes <output>/curate/{kept,rejected}
+    curate_settings = {
         "min_tokens": args.min_tokens,
-        "check_lang": bool(args.check_lang),
+        "no_check_lang": not args.check_lang,
         "url_filter": bool(args.url_filter or args.url_blocklist),
         "url_blocklist": args.url_blocklist,
         "lm_filter": bool(args.lm_filter),
@@ -351,83 +242,40 @@ def run(args) -> dict:
         "drop_code": bool(args.drop_code),
     }
 
-    def curate_done() -> bool:
-        entry = manifest["stages"].get("curate")
-        return (
-            entry is not None
-            and (entry.get("params") or {}) == curate_params
-            and os.path.exists(os.path.join(out, "curate", "kept", "_SUCCESS"))
-        )
+    def curate(in_path: str, path: str) -> int:
+        from jobs.curate import run as curate_run
 
-    if not (args.resume and not dirty and curate_done()):
-        dirty = True
-        t0 = time.monotonic()
-        kept_rows = do_curate(os.path.join(out, "curate"))
-        _commit_stage(
-            out,
-            manifest,
-            "curate",
-            {
-                "rows": int(kept_rows),
-                "wall_s": round(time.monotonic() - t0, 2),
-                "params": curate_params,
-            },
+        res = curate_run(
+            types.SimpleNamespace(
+                input=in_path,
+                output=os.path.dirname(path),
+                id_col="url",
+                master=args.master,
+                shuffle_partitions=args.shuffle_partitions,
+                **curate_settings,
+            )
         )
-
-    sample_input = os.path.join("curate", "kept")
+        return res["kept"]
 
     # -- optional: DSIR importance resampling (Xie et al. 2023) ---------
     # distribution-MATCHING selection toward a trusted target set,
     # after the rule/LM screens (select from already-clean docs)
-    if args.dsir_target:
-
-        def do_dsir(path: str) -> int:
-            from engine.ops.dsir import (
-                dsir_select_fraction,
-                fit_dsir,
-            )
-            from engine.ops.sample import hash_sample
-
-            kept = spark.read.parquet(os.path.join(out, sample_input))
-            target = spark.read.parquet(args.dsir_target)
-            # the fit needs distribution-level counts, not every row:
-            # cap the raw side at a deterministic sample
-            raw = hash_sample(kept, args.dsir_fit_fraction, id_col="url")
-            model = fit_dsir(target, raw, text_col="text")
-            sel = dsir_select_fraction(
-                kept, model, args.dsir_fraction, id_col="url"
-            )
-            sel.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path).count()
-
-        stage(
-            "dsir",
-            "dsir_selected",
-            do_dsir,
-            params={
-                "target": args.dsir_target,
-                "fraction": args.dsir_fraction,
-            },
-        )
-        sample_input = "dsir_selected"
-
-    # -- deterministic sample -> final ----------------------------------
-    def do_sample(path: str) -> int:
+    def dsir(kept):
+        from engine.ops.dsir import dsir_select_fraction, fit_dsir
         from engine.ops.sample import hash_sample
 
-        kept = spark.read.parquet(os.path.join(out, sample_input))
-        hash_sample(kept, args.sample_fraction, id_col="url").write.mode(
-            "overwrite"
-        ).parquet(path)
-        return spark.read.parquet(path).count()
+        target = spark.read.parquet(args.dsir_target)
+        # the fit needs distribution-level counts, not every row:
+        # cap the raw side at a deterministic sample
+        raw = hash_sample(kept, args.dsir_fit_fraction, id_col="url")
+        model = fit_dsir(target, raw, text_col="text")
+        return dsir_select_fraction(kept, model, args.dsir_fraction, id_col="url")
 
-    stage(
-        "sample",
-        "final",
-        do_sample,
-        params={"input": sample_input, "fraction": args.sample_fraction},
-    )
-    docs_table = "final"
+    # -- deterministic sample -> final ----------------------------------
+    def sample(kept):
+        from engine.ops.sample import hash_sample
+
+        return hash_sample(kept, args.sample_fraction, id_col="url")
 
     # -- optional: domain rebalance (host token-share cap) --------------
     # try_parse_url: malformed crawl urls yield '' instead of an ANSI
@@ -436,199 +284,188 @@ def run(args) -> dict:
         F.coalesce(F.try_parse_url("url", F.lit("HOST")), F.lit(""))
     )
 
-    if args.max_host_share < 1.0:
+    def rebalance(docs):
+        from engine.ops.mix import rebalance_domains
+        from engine.ops.pack import whitespace_token_count
 
-        def do_rebalance(path: str) -> int:
-            from engine.ops.mix import rebalance_domains
-            from engine.ops.pack import whitespace_token_count
-
-            # temp column names: docs may already carry an n_tokens
-            # curation metric, which must survive into <output>/balanced
-            docs = spark.read.parquet(os.path.join(out, docs_table)).withColumn(
-                "_rb_host", host_expr
-            ).withColumn("_rb_tokens", whitespace_token_count(F.col("text")))
-            rebalance_domains(
-                docs,
-                args.max_host_share,
-                host_col="_rb_host",
-                token_col="_rb_tokens",
-                id_col="url",
-                exact=True,
-            ).drop("_rb_host", "_rb_tokens").write.mode("overwrite").parquet(
-                path
-            )
-            return spark.read.parquet(path).count()
-
-        stage(
-            "rebalance",
-            "balanced",
-            do_rebalance,
-            params={"max_host_share": args.max_host_share},
+        # temp column names: docs may already carry an n_tokens
+        # curation metric, which must survive into <output>/balanced
+        docs = docs.withColumn("_rb_host", host_expr).withColumn(
+            "_rb_tokens", whitespace_token_count(F.col("text"))
         )
-        docs_table = "balanced"
+        return rebalance_domains(
+            docs, args.max_host_share, host_col="_rb_host", token_col="_rb_tokens",
+            id_col="url", exact=True,
+        ).drop("_rb_host", "_rb_tokens")
 
     # -- optional: temperature mix over a group column ------------------
-    if args.mix_alpha is not None:
+    def tempmix(docs):
+        from engine.ops.mix import temperature_mix
+        from engine.ops.pack import whitespace_token_count
 
-        def do_tempmix(path: str) -> int:
-            from engine.ops.mix import temperature_mix
-            from engine.ops.pack import whitespace_token_count
-
-            docs = spark.read.parquet(
-                os.path.join(out, docs_table)
-            ).withColumn("_tm_tokens", whitespace_token_count(F.col("text")))
-            temperature_mix(
-                docs,
-                args.mix_alpha,
-                group_col=args.mix_group,
-                token_col="_tm_tokens",
-                id_col="url",
-                min_group_tokens=args.mix_min_tokens,
-            ).drop("_tm_tokens").write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path).count()
-
-        stage(
-            "tempmix",
-            "tempered",
-            do_tempmix,
-            params={
-                # input is semantics-affecting: dropping --max-host-share
-                # on a resume must invalidate this stage (the repo's
-                # input-gating discipline, review r3)
-                "input": docs_table,
-                "mix_alpha": args.mix_alpha,
-                "mix_group": args.mix_group,
-                "mix_min_tokens": args.mix_min_tokens,
-            },
-        )
-        docs_table = "tempered"
+        docs = docs.withColumn("_tm_tokens", whitespace_token_count(F.col("text")))
+        return temperature_mix(
+            docs, args.mix_alpha, group_col=args.mix_group, token_col="_tm_tokens",
+            id_col="url", min_group_tokens=args.mix_min_tokens,
+        ).drop("_tm_tokens")
 
     # -- optional: host-keyed train/val/test split ----------------------
-    if args.splits:
+    def split(in_path: str, path: str) -> int:
+        from engine.ops.mix import assign_splits
+
         weights = {
             name: float(w)
             for name, w in (kv.split("=") for kv in args.splits.split(","))
         }
-
-        def do_split(path: str) -> int:
-            from engine.ops.mix import assign_splits
-
-            docs = spark.read.parquet(os.path.join(out, docs_table)).withColumn(
-                "_sp_host", host_expr
-            )
-            assign_splits(docs, weights, key_col="_sp_host").drop(
-                "_sp_host"
-            ).write.mode("overwrite").partitionBy("split").parquet(path)
-            return spark.read.parquet(path).count()
-
-        stage("split", "splits", do_split, params={"splits": args.splits})
-        docs_table = "splits"
+        docs = spark.read.parquet(in_path).withColumn("_sp_host", host_expr)
+        assign_splits(docs, weights, key_col="_sp_host").drop(
+            "_sp_host"
+        ).write.mode("overwrite").partitionBy("split").parquet(path)
+        return spark.read.parquet(path).count()
 
     # -- optional: sentence-aware chunking + sequence packing -----------
-    if args.pack_budget:
+    def pack(in_path: str, path: str) -> int:
+        from engine.ops.pack import pack_sequences, packing_stats
+        from engine.udfs import CHUNKS_DDL, chunk_map_in_pandas
 
-        def do_pack(path: str) -> int:
-            from engine.ops.pack import pack_sequences, packing_stats
-            from engine.udfs import CHUNKS_DDL, chunk_map_in_pandas
-
-            docs = spark.read.parquet(os.path.join(out, docs_table))
-            # text was rewritten by linedup/curation, so spans are
-            # recomputed inside the chunker (legacy-row fallback)
-            src = docs.filter(F.length(F.coalesce("text", F.lit(""))) > 0).select(
-                "url",
-                "text",
-                F.lit(None).cast("array<long>").alias("sent_spans"),
-            )
-            chunks = src.mapInPandas(chunk_map_in_pandas, CHUNKS_DDL)
-            split_col = None
-            if "split" in docs.columns:
-                labels = docs.select("url", "split")
-                chunks = chunks.join(labels, "url")
-                split_col = "split"
-            token_col = None
-            if getattr(args, "bpe_merges", 0):
-                # size examples in REAL subword tokens: train BPE on
-                # this corpus (engine/ops/bpe — sample-trained,
-                # map-only apply), persist merges beside the corpus
-                from engine.ops.bpe import bpe_encode, save_bpe, train_bpe
-
-                merges = train_bpe(
-                    docs, n_merges=args.bpe_merges, id_col="url"
-                )
-                save_bpe(spark, merges, os.path.join(out, "bpe_merges"))
-                manifest["bpe"] = {"n_merges": len(merges)}
-                chunks = bpe_encode(
-                    chunks, merges, text_col="chunk_text", count_only=True
-                )
-                token_col = "n_bpe_tokens"
-            # persist chunk text beside the assignments: the export
-            # stage joins it back (and downstream vector jobs reuse it)
-            chunks.write.mode("overwrite").parquet(os.path.join(out, "chunks"))
-            chunks = spark.read.parquet(os.path.join(out, "chunks"))
-            asg = pack_sequences(
-                chunks,
-                args.pack_budget,
-                n_shards=args.pack_shards,
-                split_col=split_col,
-                token_col=token_col,
-            )
-            asg.write.mode("overwrite").parquet(path)
-            asg = spark.read.parquet(path)
-            stats = packing_stats(asg, args.pack_budget).collect()[0].asDict()
-            manifest["packing"] = {k: (float(v) if v is not None else None) for k, v in stats.items()}
-            return asg.count()
-
-        stage(
-            "pack",
-            "examples",
-            do_pack,
-            params={
-                "input": docs_table,
-                "budget": args.pack_budget,
-                "shards": args.pack_shards,
-                "bpe_merges": getattr(args, "bpe_merges", 0),
-            },
+        docs = spark.read.parquet(in_path)
+        # text was rewritten by linedup/curation, so spans are
+        # recomputed inside the chunker (legacy-row fallback)
+        src = docs.filter(F.length(F.coalesce("text", F.lit(""))) > 0).select(
+            "url", "text", F.lit(None).cast("array<long>").alias("sent_spans")
         )
+        chunks = src.mapInPandas(chunk_map_in_pandas, CHUNKS_DDL)
+        split_col = None
+        if "split" in docs.columns:
+            labels = docs.select("url", "split")
+            chunks = chunks.join(labels, "url")
+            split_col = "split"
+        token_col = None
+        if args.bpe_merges:
+            # size examples in REAL subword tokens: train BPE on
+            # this corpus (engine/ops/bpe — sample-trained,
+            # map-only apply), persist merges beside the corpus
+            from engine.ops.bpe import bpe_encode, save_bpe, train_bpe
+
+            merges = train_bpe(docs, n_merges=args.bpe_merges, id_col="url")
+            save_bpe(spark, merges, os.path.join(out, "bpe_merges"))
+            manifest["bpe"] = {"n_merges": len(merges)}
+            chunks = bpe_encode(
+                chunks, merges, text_col="chunk_text", count_only=True
+            )
+            token_col = "n_bpe_tokens"
+        # persist chunk text beside the assignments: the export
+        # stage joins it back (and downstream vector jobs reuse it)
+        chunks.write.mode("overwrite").parquet(os.path.join(out, "chunks"))
+        chunks = spark.read.parquet(os.path.join(out, "chunks"))
+        asg = pack_sequences(
+            chunks, args.pack_budget, n_shards=args.pack_shards,
+            split_col=split_col, token_col=token_col,
+        )
+        asg.write.mode("overwrite").parquet(path)
+        asg = spark.read.parquet(path)
+        stats = packing_stats(asg, args.pack_budget).collect()[0].asDict()
+        manifest["packing"] = {k: (float(v) if v is not None else None) for k, v in stats.items()}
+        return asg.count()
 
     # -- optional: JSONL training export --------------------------------
-    if args.export_shard_mb:
+    def export(in_path: str, path: str) -> int:
+        from engine.io.export import export_jsonl
 
-        def do_export(path: str) -> int:
-            from engine.io.export import export_jsonl
+        rows, key = spark.read.parquet(in_path), "url"
+        if args.pack_budget:
+            # packed path: the input is the examples table; ship the
+            # materialized examples (ordered chunk concat) — the
+            # trainer-ready unit
+            from engine.ops.pack import assemble_examples
 
-            if args.pack_budget:
-                # packed path: materialize examples (ordered chunk
-                # concat, engine/ops/pack.assemble_examples) and ship
-                # those — the trainer-ready unit
-                from engine.ops.pack import assemble_examples
-
-                asg = spark.read.parquet(os.path.join(out, "examples"))
-                chunks = spark.read.parquet(os.path.join(out, "chunks"))
-                rows, key = assemble_examples(asg, chunks), "example_id"
-            else:
-                rows, key = (
-                    spark.read.parquet(os.path.join(out, docs_table)),
-                    "url",
-                )
-            info = export_jsonl(
-                rows,
-                path,
-                key_col=key,
-                shard_max_bytes=args.export_shard_mb << 20,
-            )
-            manifest["export"] = info
-            return info["rows"]
-
-        stage(
-            "export",
-            "export",
-            do_export,
-            params={
-                "packed": bool(args.pack_budget),
-                "input": "examples" if args.pack_budget else docs_table,
-                "shard_mb": args.export_shard_mb,
-            },
+            chunks = spark.read.parquet(os.path.join(out, "chunks"))
+            rows, key = assemble_examples(rows, chunks), "example_id"
+        info = export_jsonl(
+            rows, path, key_col=key, shard_max_bytes=args.export_shard_mb << 20
         )
+        manifest["export"] = info
+        return info["rows"]
+
+    # the chain, in order; `on` enables the opt-in stages
+    stages = [
+        _Stage("extract", "extracted", extract, extract_params),
+        _Stage("linefix", "linefixed", linefix,
+               {"max_removed_frac": args.max_removed_frac}, on=args.fix_lines),
+        _Stage("langsplit", "monolingual", langsplit,
+               {"lang": args.monolingual, "min_frac": args.lang_min_frac},
+               on=bool(args.monolingual)),
+        _Stage("neardup", "canonical", neardup),
+        _Stage("linedup", "cleaned", linedup),
+        _Stage("substrdedup", "substr_cleaned", substrdedup,
+               {"w": args.substr_w}, on=bool(args.substr_w)),
+        _Stage("curate", "curate/kept", curate, curate_settings, writes=True),
+        _Stage("dsir", "dsir_selected", dsir,
+               {"target": args.dsir_target, "fraction": args.dsir_fraction},
+               on=bool(args.dsir_target)),
+        _Stage("sample", "final", sample, {"fraction": args.sample_fraction}),
+        _Stage("rebalance", "balanced", rebalance,
+               {"max_host_share": args.max_host_share},
+               on=args.max_host_share < 1.0),
+        _Stage("tempmix", "tempered", tempmix,
+               {"mix_alpha": args.mix_alpha, "mix_group": args.mix_group,
+                "mix_min_tokens": args.mix_min_tokens},
+               on=args.mix_alpha is not None),
+        _Stage("split", "splits", split, {"splits": args.splits},
+               on=bool(args.splits), writes=True),
+        _Stage("pack", "examples", pack,
+               {"budget": args.pack_budget, "shards": args.pack_shards,
+                "bpe_merges": args.bpe_merges},
+               on=bool(args.pack_budget), writes=True),
+        _Stage("export", "export", export,
+               {"packed": bool(args.pack_budget),
+                "shard_mb": args.export_shard_mb},
+               on=bool(args.export_shard_mb), writes=True),
+    ]
+    stages = [st for st in stages if st.on]
+
+    # One loop runs the chain. Each stage reads the previous enabled
+    # stage's table and records it as params["input"]: toggling an
+    # opt-in stage on a resumed run changes what later stages read, so
+    # their committed tables must not be trusted across that change.
+    # A stage that re-runs invalidates everything downstream of it —
+    # its output is those stages' input, so their committed tables are
+    # stale even though their own params match.
+    dirty = False
+    prev = None
+    for st in stages:
+        params = dict(st.params or {})
+        if prev is not None:
+            params["input"] = prev
+        in_path = args.pages if prev is None else os.path.join(out, prev)
+        prev = st.table
+        if (
+            args.resume
+            and not dirty
+            and _stage_done(out, manifest, st.name, st.table, params)
+        ):
+            continue
+        dirty = True
+        t0 = time.monotonic()
+        path = os.path.join(out, st.table)
+        if st.writes:
+            rows = st.build(in_path, path)
+        else:
+            df = st.build(spark.read.parquet(in_path))
+            df.write.mode("overwrite").parquet(path)
+            rows = spark.read.parquet(path).count()
+        # partitionBy writes under the session's dynamic
+        # partitionOverwriteMode commit WITHOUT a root _SUCCESS (every
+        # resume re-ran split and cascaded through pack/export). The
+        # marker is this job's stage-completion contract, and the stage
+        # has fully returned, which is exactly what _SUCCESS asserts.
+        marker = os.path.join(path, "_SUCCESS")
+        if os.path.isdir(path) and not os.path.exists(marker):
+            open(marker, "w").close()
+        info = {"rows": int(rows), "wall_s": round(time.monotonic() - t0, 2)}
+        if params:
+            info["params"] = params
+        _commit_stage(out, manifest, st.name, info)
 
     # -- optional: corpus card over the final docs table ----------------
     # Runs every invocation when asked (no resume gate: the card costs
@@ -636,20 +473,16 @@ def run(args) -> dict:
     # idempotent — and a resumed run's card should reflect the tables
     # as they now stand)
     if args.report:
-        import types
-
         from jobs.report import build_card, card_delta
 
+        docs_table = [
+            st.table for st in stages if st.name not in ("pack", "export")
+        ][-1]
         card = build_card(
             spark,
             types.SimpleNamespace(
-                text_col="text",
-                id_col="url",
-                lang_col="lang",
-                host_col="host",
-                top_hosts=20,
-                top_ngrams=0,
-                ngram_n=10,
+                text_col="text", id_col="url", lang_col="lang",
+                host_col="host", top_hosts=20, top_ngrams=0, ngram_n=10,
             ),
             os.path.join(out, docs_table),
         )

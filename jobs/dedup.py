@@ -127,8 +127,9 @@ def run(args) -> dict:
                 id_col=args.id_col,
                 text_col=args.text_col,
             )
-        # pairs feed clustering twice (edge list + convergence); write
-        # once and read back — the 10^12-scale persist() seam
+        # <output>/pairs is a declared output table of this job (the
+        # candidate edges behind the clusters); clustering reads it
+        # back, and connected_components checkpoints its own edge list
         pairs_path = os.path.join(args.output, "pairs")
         write_table(pairs, pairs_path)
         pairs = spark.read.parquet(pairs_path)

@@ -782,3 +782,35 @@ def test_kill_mid_stage_resume_byte_equals_single_shot(
         k: v["rows"] for k, v in ref_res["stages"].items()
     }
     assert _artifact_bytes(out) == _artifact_bytes(ref_out)
+
+
+def test_resume_after_legacy_extract_manifest(tmp_path, pages_path, chaos_ref):
+    """A manifest whose extract entry carries only rows and wall_s (no
+    params key) — the shape earlier runs left behind, and the shape an
+    extract stage built outside this job writes — resumes after
+    extract: extract is skipped, and every later stage lands on the
+    single-shot row counts and export bytes."""
+    import shutil
+
+    from jobs.corpus import run
+
+    ref_out, ref_res = chaos_ref
+    out = str(tmp_path / "corpus")
+    shutil.copytree(os.path.join(ref_out, "extracted"), f"{out}/extracted")
+    with open(f"{out}/corpus_manifest.json", "w") as f:
+        json.dump(
+            {"stages": {"extract": {
+                "rows": ref_res["stages"]["extract"]["rows"], "wall_s": 1.0,
+            }}},
+            f,
+        )
+    marker = f"{out}/extracted/_SUCCESS"
+    before = os.path.getmtime(marker)
+
+    res = run(_args(pages_path, out, resume=True, **CHAOS_KW))
+    assert os.path.getmtime(marker) == before
+    assert res["stages"]["extract"]["wall_s"] == 1.0
+    assert {k: v["rows"] for k, v in res["stages"].items()} == {
+        k: v["rows"] for k, v in ref_res["stages"].items()
+    }
+    assert _artifact_bytes(out) == _artifact_bytes(ref_out)

@@ -136,6 +136,44 @@ def test_typed_rejections():
         decode_jpeg_luma(good[: len(good) // 2])
 
 
+def _one_block_jpeg(sof: int, dc_size: int) -> bytes:
+    """8x8 gray, one block whose DC category is `dc_size` (1-bit code
+    '0') followed by all-ones magnitude bits, then (sequential only)
+    an AC EOB. Progressive = a single DC-first scan."""
+    sof_body = struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0])
+    dht = bytes([0x00, 1] + [0] * 15 + [dc_size])
+    dht += bytes([0x10, 1] + [0] * 15 + [0x00])
+    se = 63 if sof == 0xC0 else 0
+    bits = "0" + "1" * dc_size + ("0" if se else "")
+    bits += "1" * (-len(bits) % 8)
+    data = b""
+    for i in range(0, len(bits), 8):
+        byte = int(bits[i : i + 8], 2)
+        data += bytes([byte, 0x00] if byte == 0xFF else [byte])
+    return (
+        b"\xff\xd8"
+        + _seg(0xDB, bytes([0]) + bytes([1] * 64))
+        + _seg(sof, sof_body)
+        + _seg(0xC4, dht)
+        + _seg(0xDA, bytes([1, 1, 0x00, 0, se, 0]))
+        + data
+        + b"\xff\xd9"
+    )
+
+
+@pytest.mark.parametrize("sof", [0xC0, 0xC2])
+def test_dc_size_above_11_is_rejected(sof):
+    """T.81 caps the DC category at 11 for 8-bit samples. A DHT
+    carrying a larger DC symbol must be a typed error in both the
+    sequential and the progressive DC path — not a read of up to 255
+    raw bits whose prediction overflows (and, in the progressive
+    int32 coefficient plane, silently wraps)."""
+    assert decode_jpeg_luma(_one_block_jpeg(sof, 11))[:2] == (8, 8)
+    for size in (12, 32):
+        with pytest.raises(ValueError, match="jpeg_bad_dc_size"):
+            decode_jpeg_luma(_one_block_jpeg(sof, size))
+
+
 def test_media_features_jpeg_real_decode():
     from engine.kernels.multimodal import ahash64, media_features
 
